@@ -797,8 +797,8 @@ def q_broken_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_resolve_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2: RFC-3986 reference resolution on the common grammar —
     absolute kept, '/x' → scheme://host/x, relative → parent dir
-    (crawler.go:862-866; full urljoin parity via the pandas UDF is unit
-    tested, this query covers the SQL-expressible grammar)."""
+    (crawler.go:862-866; the http fetch kernel resolves hrefs with
+    urljoin, this query covers the SQL-expressible grammar)."""
     base = canon_corpus(spark, sf_dir).select("k", "url_norm", "host", "path")
     href = (
         F.when(F.col("k") % 4 == 0, F.lit("https://ext.test/abs"))

@@ -4,11 +4,11 @@
         --seeds <seeds parquet: url,priority,seq> \
         --state <state dir (DBFS/S3/HDFS-compatible for data; manifests
                  need a shared POSIX path or an Iceberg catalog in prod)> \
-        --rounds 20 [--budget 20] [--salted] [--backend synthetic|http]
+        --rounds 20 [--budget 20] [--backend synthetic|http]
 
 On a cluster, `master` comes from spark-submit; locally it falls back to
 local[*]. Resume: re-run with the same --state — the engine continues
-from the last committed snapshot.
+at the round boundary after the last committed frontier snapshot.
 """
 
 from __future__ import annotations
@@ -27,13 +27,7 @@ def main() -> None:
     p.add_argument("--state", required=True)
     p.add_argument("--rounds", type=int, default=10)
     p.add_argument("--budget", type=int, default=20)
-    p.add_argument("--salted", action="store_true")
     p.add_argument("--backend", default="synthetic")
-    p.add_argument(
-        "--no-adaptive-width", action="store_true",
-        help="disable the sketch-driven width knobs (round 6; widths "
-             "only — crawl results are identical either way)",
-    )
     p.add_argument("--mode", default="",
                    help="optional result mode after the crawl: search | "
                         "broken-links | oversized-images (crawler.Start modes 1-4)")
@@ -44,10 +38,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("webcrawler-go-spark").getOrCreate()
     cfg = CrawlConfig(max_rounds=args.rounds, default_host_budget=args.budget)
-    eng = CrawlEngine(
-        spark, cfg, args.state, fetch_backend=args.backend, salted=args.salted,
-        adaptive_width=not args.no_adaptive_width,
-    )
+    eng = CrawlEngine(spark, cfg, args.state, fetch_backend=args.backend)
     head = eng.frontier_t.current_snapshot()
     if head is None:
         eng.run(spark.read.parquet(args.seeds), max_rounds=args.rounds)

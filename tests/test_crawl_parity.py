@@ -199,7 +199,7 @@ def test_sketch_width_knobs_populated_and_sound(spark, state_dir):
     green whether or not the knobs fire."""
     world = World(n_hosts=8, pages_per_host=40)
     cfg = CrawlConfig(max_rounds=3, default_host_budget=10)
-    eng = CrawlEngine(spark, cfg, state_dir, world=world, adaptive_width=True)
+    eng = CrawlEngine(spark, cfg, state_dir, world=world)
     eng.seed(_seeds_df(spark))
     eng.run_round(0)
     knobs = eng._width_knobs

@@ -8,6 +8,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# AIMD budget adaptation (CrawlEngine(adaptive_budget=True) and the
+# sequential oracle): budgets recover additively up to AIMD_MAX_BUDGET,
+# over a sliding window of the last AIMD_WINDOW rounds
+AIMD_MAX_BUDGET = 100
+AIMD_WINDOW = 8
+
 
 @dataclass(frozen=True)
 class CrawlConfig:

@@ -77,8 +77,3 @@ def hash31_hex8(s: str) -> str:
     for c in s:
         h = (h * 31 + ord(c)) & 0xFFFFFFFF
     return f"{h:08x}"
-
-
-def hash31_hex8_np(strs) -> np.ndarray:
-    """Vectorized hash31_hex8 for pandas-UDF use."""
-    return np.array([hash31_hex8(s) for s in strs], dtype=object)

@@ -17,14 +17,16 @@ Round r (all DataFrame ops; driver only sequences rounds):
 
 State tables (frontier, url_seen, blocked→encoded in frontier rows,
 documents, fetch_log, metrics) live in SnapshotTable (Iceberg stand-in,
-state.py) — every round is an atomic commit carrying lineage, so the
-crawl resumes from ANY snapshot (skip-if-exists parity,
-pdfcapture.go:199-223, but transactional).
+state.py) — every round is a set of atomic commits carrying lineage, so a
+crawl stopped BETWEEN rounds resumes at the next round boundary
+(skip-if-exists parity, pdfcapture.go:199-223, but transactional). A
+crash inside a round is not covered: the round's commits are not one
+transaction, so a resume after such a crash can fetch that round twice.
 
 Scale notes: the write-then-read through the state layer each round also
 truncates lineage (SURVEY §4.3 — required in iterative Spark jobs); the
 anti-join + repartition are the only shuffles per round; the politeness
-Window is salted when a host exceeds ``salt_threshold`` rows.
+Window is salted when the round exceeds ``SALT_THRESHOLD`` rows.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webcrawler_go_spark.config import CrawlConfig
+from webcrawler_go_spark.config import AIMD_MAX_BUDGET, AIMD_WINDOW, CrawlConfig
 from webcrawler_go_spark.functions.classify import error_taxonomy, status_class
 from webcrawler_go_spark.functions.urls import canonicalize_cols
 from webcrawler_go_spark.operators.dedup import dedup_against_seen, first_discovery
@@ -57,6 +59,10 @@ from webcrawler_go_spark.worldgen import World
 
 # DNS failures abort retries (crawler.go:606-609)
 _NO_RETRY_ERRORS = ("no such host",)
+# the Bloom pre-filter pays off once the seen set is this big
+BLOOM_THRESHOLD = 1_000_000
+# salted="auto" salts the politeness Window above this many round rows
+SALT_THRESHOLD = 200_000
 
 
 @dataclass
@@ -81,15 +87,10 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         fetch_backend: str = "synthetic",
         salted: bool | str = "auto",
-        bloom_threshold: int = 1_000_000,
-        salt_threshold: int = 200_000,
         collect_stats: bool = True,
         maintenance_interval: int = 0,
-        adaptive_width: bool | str = "auto",
         adaptive_budget: bool = False,
-        aimd_max_budget: int = 100,
         aimd_hot_milli: int = 200,
-        aimd_window: int = 8,
     ):
         self.spark = spark
         self.config = config
@@ -107,8 +108,6 @@ class CrawlEngine:
             )
         self.budgets = budgets
         self.robots = robots
-        self.bloom_threshold = bloom_threshold
-        self.salt_threshold = salt_threshold
         self.collect_stats = collect_stats
         # every N rounds, compact the append-mode tables (url_seen /
         # fetch_log / documents) back to ~core-count files and expire
@@ -125,11 +124,6 @@ class CrawlEngine:
         # whole-table manifest count (which includes deferred rows and
         # knows nothing about skew). Sketches ONLY influence widths —
         # membership (dedup, seen, budgets) never reads them.
-        if adaptive_width == "auto":
-            adaptive_width = (
-                os.environ.get("SPARK_GRAFT_ADAPTIVE_WIDTH", "1") != "0"
-            )
-        self.adaptive_width = bool(adaptive_width)
         self._width_knobs: dict | None = None
         # AIMD politeness-budget adaptation (VERDICT r6 directive #3,
         # design b92fc25): when on, the budget dim schedule_round
@@ -137,8 +131,8 @@ class CrawlEngine:
         # accumulated per-host round counters (the A1 family) via
         # scheduling.aimd_budgets — budgets halve on a measured bad
         # round ((errors+blocked)/fetched ≥ hot_milli/1000) and recover
-        # additively, bounded by [1, aimd_max_budget], over a sliding
-        # window of the last ``aimd_window`` rounds. The recurrence is
+        # additively, bounded by [1, AIMD_MAX_BUDGET], over a sliding
+        # window of the last ``AIMD_WINDOW`` rounds. The recurrence is
         # data-encoded (unrolled integer CASE chain, one host-keyed
         # exchange); budgets steer SCHEDULING only — membership (dedup,
         # seen) never reads them. A user-supplied static ``budgets``
@@ -146,9 +140,7 @@ class CrawlEngine:
         # Sequential-oracle parity: oracle/sequential.py implements the
         # identical recurrence (tests/test_crawl_parity.py).
         self.adaptive_budget = bool(adaptive_budget)
-        self.aimd_max_budget = aimd_max_budget
         self.aimd_hot_milli = aimd_hot_milli
-        self.aimd_window = aimd_window
         self._host_health: DataFrame | None = None
         # The health ledger is ALSO a snapshot table so S9 resumability
         # covers AIMD: a fresh engine resuming mid-crawl restores the
@@ -161,7 +153,6 @@ class CrawlEngine:
             self.health_t = SnapshotTable(
                 state_dir, "host_health", HOST_HEALTH
             ).init(spark)
-        self.profile = False  # per-phase wall timing to stderr (debug)
         self.stats: list[RoundStats] = []
 
     # -- seeding ---------------------------------------------------------
@@ -236,19 +227,6 @@ class CrawlEngine:
     # -- one round --------------------------------------------------------
 
     def run_round(self, r: int) -> RoundStats:
-        import sys as _sys
-        import time as _time
-
-        _t0 = _time.perf_counter()
-
-        def _mark(label):
-            if self.profile:
-                print(
-                    f"    [round {r}] {label}: "
-                    f"{_time.perf_counter() - _t0:.2f}s cumulative",
-                    file=_sys.stderr,
-                )
-
         cfg = self.config
         frontier = self.frontier_t.read()
         seen = self.seen_t.read()
@@ -269,7 +247,7 @@ class CrawlEngine:
         new = dedup_against_seen(
             unique,
             seen,
-            use_bloom=seen_estimate > self.bloom_threshold,
+            use_bloom=seen_estimate > BLOOM_THRESHOLD,
             seen_count=seen_estimate,
             fpp=cfg.bloom_fpp,
         )
@@ -288,7 +266,7 @@ class CrawlEngine:
         fr_head = self.frontier_t.current_snapshot()
         frontier_rows = fr_head.get("total_rows", 0) if fr_head else 0
         knobs = self._width_knobs
-        if not (self.adaptive_width and knobs and knobs.get("at_round") == r):
+        if not (knobs and knobs.get("at_round") == r):
             knobs = None
         est_rows = knobs["est_urls"] if knobs else frontier_rows
         fetch_chunk = None
@@ -300,7 +278,7 @@ class CrawlEngine:
         salted = (
             self.salted
             if isinstance(self.salted, bool)
-            else est_rows > self.salt_threshold
+            else est_rows > SALT_THRESHOLD
         )
         scheduled, overflow = schedule_round(
             new.unionByName(deferred.limit(0)),  # schema guard
@@ -322,9 +300,7 @@ class CrawlEngine:
         )
         # one round = one materialization: cache the kernel output so the
         # documents/links/retries/metrics branches don't re-fetch
-        _mark("plan-built")
         fetched = fetched.localCheckpoint(eager=True)
-        _mark("fetch-checkpoint")
 
         # --- retry / blocked requeue (W3 + J3) ---------------------------
         retry_error = (
@@ -396,7 +372,7 @@ class CrawlEngine:
         candidates = dedup_against_seen(
             candidates,
             seen.unionByName(seen_delta),
-            use_bloom=seen_estimate > self.bloom_threshold,
+            use_bloom=seen_estimate > BLOOM_THRESHOLD,
             seen_count=seen_estimate,
             fpp=cfg.bloom_fpp,
         )
@@ -450,36 +426,27 @@ class CrawlEngine:
             ]
             # main thread: materialize the frontier dedup concurrently
             # with the three writes
-            ckpt = os.environ.get("SPARK_GRAFT_FRONTIER_CKPT", "1") != "0"
-            if ckpt:
-                next_frontier = next_frontier.localCheckpoint(eager=True)
-            _mark("frontier-dedup")
+            next_frontier = next_frontier.localCheckpoint(eager=True)
             futures.append(
                 pool.submit(
                     self.frontier_t.commit, next_frontier.coalesce(n_out),
                     mode="replace", lineage={"round": r + 1},
                 )
             )
-            if self.adaptive_width:
-                # ADVICE r6: adaptive width must not silently die when
-                # SPARK_GRAFT_FRONTIER_CKPT=0 — without the checkpoint
-                # the sketch job recomputes the frontier lineage (the
-                # cost of disabling ckpt), but the knobs stay live.
-                # overlapped sketch job over the (checkpointed) next
-                # frontier: HLL distinct-URL estimate of round r+1's
-                # READY slice + CMS max-bucket depth bound for its
-                # hottest host. Both are map-side-combining aggregations
-                # whose exchanges are sketch-sized (≤2^p registers /
-                # d·w counters) — the 10^10-frontier replacement for an
-                # exact count job. Results drive NEXT round's widths
-                # only; failures degrade to manifest counts.
-                pool.submit(self._sketch_width_knobs, next_frontier, r + 1)
+            # overlapped sketch job over the checkpointed next frontier:
+            # HLL distinct-URL estimate of round r+1's READY slice + CMS
+            # max-bucket depth bound for its hottest host. Both are
+            # map-side-combining aggregations whose exchanges are
+            # sketch-sized (≤2^p registers / d·w counters) — the
+            # 10^10-frontier replacement for an exact count job. Results
+            # drive NEXT round's widths only; failures degrade to
+            # manifest counts.
+            pool.submit(self._sketch_width_knobs, next_frontier, r + 1)
             commit_manifests = [f_.result() for f_ in futures]
         # the fetch-log commit's own manifest — NOT re-read from the head
         # later: maintenance may REPLACE the head with a compact snapshot
         # whose new_rows is the whole-table count, not this round's
         log_manifest = commit_manifests[2]
-        _mark("commits")
 
         if self.adaptive_budget:
             # AFTER the commit pool on purpose: round r's overflow (now
@@ -488,14 +455,12 @@ class CrawlEngine:
             # earlier and the old health checkpoint gets unpersisted
             # while that lineage still needs it.
             self._aimd_rebalance(fetched, r)
-            _mark("aimd-rebalance")
 
         if self.maintenance_interval and (r + 1) % self.maintenance_interval == 0:
             target = max(4, self.spark.sparkContext.defaultParallelism)
             for t in (self.seen_t, self.log_t, self.docs_t):
                 if t.compact(target_files=target, lineage={"round": r}):
                     t.expire_snapshots(keep_last=2)
-            _mark("maintenance")
 
         # --- per-round metrics (A1/A2/A3 in one aggregate) -----------------
         if not self.collect_stats:
@@ -568,7 +533,7 @@ class CrawlEngine:
             ).alias("blocked"),
         ).withColumn("round", F.lit(r))
         hc = hc.select(*[f.name for f in HOST_HEALTH.fields])
-        lo = max(0, r + 1 - self.aimd_window)
+        lo = max(0, r + 1 - AIMD_WINDOW)
         health = hc if self._host_health is None else (
             self._host_health.unionByName(hc)
         )
@@ -595,7 +560,7 @@ class CrawlEngine:
             health.withColumn("round", F.col("round") - lo),
             n_rounds=r + 1 - lo,
             base_budget=self.config.default_host_budget,
-            max_budget=self.aimd_max_budget,
+            max_budget=AIMD_MAX_BUDGET,
             hot_milli=self.aimd_hot_milli,
         )
         self.budgets = bud.select(
@@ -617,7 +582,7 @@ class CrawlEngine:
         map_from_entries raise at resume (ADVICE r7)."""
         from webcrawler_go_spark.operators.scheduling import aimd_budgets
 
-        lo = max(0, next_round - self.aimd_window)
+        lo = max(0, next_round - AIMD_WINDOW)
         health = (
             self.health_t.read()
             .filter((F.col("round") >= lo) & (F.col("round") < next_round))
@@ -645,7 +610,7 @@ class CrawlEngine:
             health.withColumn("round", F.col("round") - lo),
             n_rounds=next_round - lo,
             base_budget=self.config.default_host_budget,
-            max_budget=self.aimd_max_budget,
+            max_budget=AIMD_MAX_BUDGET,
             hot_milli=self.aimd_hot_milli,
         )
         self.budgets = bud.select(
@@ -728,8 +693,8 @@ class CrawlEngine:
     def resume(
         self, start_round: int | None = None, max_rounds: int | None = None
     ) -> list[RoundStats]:
-        """Continue from the current snapshots — crash/cancel resumability
-        (the engine's skip-if-exists, but transactional)."""
+        """Continue from the current snapshots at the next round boundary
+        (the engine's skip-if-exists, but transactional per commit)."""
         max_rounds = max_rounds or self.config.max_rounds
         if start_round is None:
             head = self.frontier_t.current_snapshot()

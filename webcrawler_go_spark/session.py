@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -53,10 +53,7 @@ def get_spark(
         # stable ~3 s at 5 k (and 40k made it 2× worse again); 8-way is
         # unchanged-to-better. Smaller batches also pipeline IPC more
         # smoothly on a real cluster's per-executor buses.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "5000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "5000")
         # iterative frontier loop: keep plans from growing without bound
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # deterministic results matter more than rounding niceties here
